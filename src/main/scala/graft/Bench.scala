@@ -249,6 +249,7 @@ object Bench {
     // per-query map + scaling inline — goes ONLY to the side file, and stdout
     // ends with a ≤1 KB summary whose "detail" points at it.
     val full = s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":$qs,"sf":"$sfDir",""" +
+      s""""commit":"${ScaleBench.gitCommit()}","cpus":$cpus,""" +
       s""""contention_other_steal":$contQs,"load1":[${passLoads.map(num).mkString(",")}],""" +
       s""""cpu_ref_mops":[${cpuRefs.map(num).mkString(",")}],""" +
       s""""cpu_ref_mops_median":${num(refSingleMed)},""" +
@@ -261,24 +262,19 @@ object Bench {
       s""""anchor_baseline_single_mops":${num(BaselineSingleMops)},""" +
       s""""value_norm":${num(totalNorm)},"value_norm_single":${num(totalNormSingle)},""" +
       s""""other_cpu_pct":${num(otherMed)},"steal_pct":${num(stealMed)},"contended":$contended$scaling}"""
-    // Detail path is (cpus, sf)-STAMPED by default (VERDICT r18 #2): the
-    // fixed bench_out.json meant any later run — the driver's 8-core
-    // scaling run, a profile — clobbered the 32-core run's per-query map,
-    // which is why PERF_r18 had n_common=0 and an empty scaling block. A
-    // stamped path makes runs at different core counts coexist; the
-    // summary line's "detail" names the file for this run. bench_out.json
-    // is still written as a back-compat mirror for any consumer that
-    // hardcodes it (additive — same bytes).
+    // Detail path is (cpus, sf)-STAMPED by default, and it is the ONLY
+    // output file: a fixed path let any later run (an 8-core scaling run,
+    // a profile) clobber the 32-core run's per-query map. Runs at
+    // different core counts coexist; the summary line's "detail" names
+    // the file for this run, and the file itself carries commit, cpus
+    // and sf.
     val sfName = new java.io.File(sfDir).getName.replaceAll("[^A-Za-z0-9._-]", "_")
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       s"bench_detail_c${cpus}_$sfName.json")
-    def writeOut(p: String): Unit =
-      try java.nio.file.Files.write(
-        java.nio.file.Paths.get(p),
-        full.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      catch { case e: Throwable => System.err.println(s"[bench] write $p failed: ${e.getMessage}") }
-    writeOut(outFile)
-    if (outFile != "bench_out.json") writeOut("bench_out.json")
+    try java.nio.file.Files.write(
+      java.nio.file.Paths.get(outFile),
+      full.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    catch { case e: Throwable => System.err.println(s"[bench] write $outFile failed: ${e.getMessage}") }
     val summary = s"""{"metric":"total","value":${num(total)},"unit":"sec","n_queries":${results.size},"n_failed":${failedNames.size},"sf":"$sfDir","max_query":"$maxName","max_query_s":${num(maxT._1)},"contended":$contended,"other_cpu_pct":${num(otherMed)},"cpu_ref_mops":${num(refSingleMed)},"cpu_ref_all_mops":${num(refAllMed)},"value_norm":${num(totalNorm)},"detail":"$outFile"$scalingSrc}"""
     println(summary)
     spark.stop()

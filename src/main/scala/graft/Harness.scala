@@ -229,7 +229,8 @@ object Harness {
 
     // ---- volume regime: deterministic pseudo-random corpus, fixed nbits
     // (populations ∝ corpus — the regime the band-bucket caps exist for),
-    // candidate volume ~ (nBase/16)·(nDelta/16)·tables pairs
+    // candidate volume ≈ nBase·nDelta·(1 − (15/16)^tables) gid pairs for
+    // evenly filled buckets
     {
       // hash-derived floats in [-1, 1): engine-deterministic, incompressible
       def vecCol = transform(sequence(lit(0), lit(63)),
@@ -240,22 +241,23 @@ object Harness {
       val delta = spark.range(nBase, nBase + nDelta).select(
         col("id").as("vec_id"), vecCol.as("embedding"))
       val root = java.nio.file.Files.createTempDirectory("quantvol").toFile
-      root.deleteOnExit()
-      EmbeddingIndex.write(base, root.getAbsolutePath, dim = 64, nbits = 4,
-        tables = 8)
-      def run(qp: Option[Boolean]): Long =
-        EmbeddingIndex.deltaPairs(spark, root.getAbsolutePath, delta,
-          threshold = 0.45, quantPrefilter = qp).count()
-      val anchor0 = ScaleBench.cpuRefMops()
-      val (offW, offN) = medianWall("volume delta quant=off")(run(Some(false)))
-      val (onW, onN) = medianWall("volume delta quant=on")(run(Some(true)))
-      val (autoW, autoN) = medianWall("volume delta quant=auto")(run(None))
-      val anchor1 = ScaleBench.cpuRefMops()
-      require(offN == onN && offN == autoN,
-        s"volume outputs diverged: $offN vs $onN vs $autoN")
-      sections += s""""volume":{"nbase":$nBase,"ndelta":$nDelta,""" +
-        s""""off_s":${jnum(offW)},"on_s":${jnum(onW)},"auto_s":${jnum(autoW)},""" +
-        s""""rows":$offN,"cpu_ref_mops":[${jnum(anchor0)},${jnum(anchor1)}]}"""
+      try {
+        EmbeddingIndex.write(base, root.getAbsolutePath, dim = 64, nbits = 4,
+          tables = 8)
+        def run(qp: Option[Boolean]): Long =
+          EmbeddingIndex.deltaPairs(spark, root.getAbsolutePath, delta,
+            threshold = 0.45, quantPrefilter = qp).count()
+        val anchor0 = ScaleBench.cpuRefMops()
+        val (offW, offN) = medianWall("volume delta quant=off")(run(Some(false)))
+        val (onW, onN) = medianWall("volume delta quant=on")(run(Some(true)))
+        val (autoW, autoN) = medianWall("volume delta quant=auto")(run(None))
+        val anchor1 = ScaleBench.cpuRefMops()
+        require(offN == onN && offN == autoN,
+          s"volume outputs diverged: $offN vs $onN vs $autoN")
+        sections += s""""volume":{"nbase":$nBase,"ndelta":$nDelta,""" +
+          s""""off_s":${jnum(offW)},"on_s":${jnum(onW)},"auto_s":${jnum(autoW)},""" +
+          s""""rows":$offN,"cpu_ref_mops":[${jnum(anchor0)},${jnum(anchor1)}]}"""
+      } finally org.apache.commons.io.FileUtils.deleteDirectory(root)
     }
 
     val json = sections.mkString("{", ",", "}")

@@ -15,15 +15,17 @@ import graft.dedup.{Dedup, EmbeddingIndex}
   * ceiling with exact-rescore; adapted to a per-vector signed ceiling for
   * dense embeddings, [[Dedup.quantizeVecUdf]]).
   *
-  * The prefilter is the 100 TB candidate-volume lever (verification joins
-  * carry 64 bytes + 2 floats instead of 64 floats; survivors of the
-  * provably-safe bound are the only rows that touch the wide payload) —
-  * default AUTO since r19 (cuts over on measured candidate volume —
-  * these forced-on gates stay as the oracle-gated equivalence pin)
-  * because at gate scale the cost is Spark stage count, not
-  * payload bytes (measured r17: the capped delta gate spends ~5 s of an
-  * 8 s wall in driver gaps between 42 jobs — SCALE.md "quantized
-  * prefilter" cell). */
+  * The prefilter is the 100 TB candidate-volume lever: verification joins
+  * carry 64 bytes + 2 floats instead of 64 floats, and only survivors of
+  * the provably-safe bound touch the wide payload. Left unforced it
+  * follows ONE AUTO rule (Dedup's prefilter section): on once the
+  * candidate volume reaches `QuantAutoMinPairs` — Σ C(pop, 2) over the
+  * bucket populations in the batch forms, the exact |candGid| on the
+  * delta path. Gate-scale corpora stay under it, because there the cost
+  * is Spark stage count, not payload bytes (SCALE.md "quantized
+  * prefilter" cell: the capped delta gate spends ~5 s of an 8 s wall in
+  * driver gaps between 42 jobs); these forced-on gates keep the
+  * prefilter itself oracle-pinned. */
 object Queries20 {
 
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =

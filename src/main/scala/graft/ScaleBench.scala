@@ -166,6 +166,17 @@ object ScaleBench {
     new java.io.File(fs, "_DONE").createNewFile()
   }
 
+  /** Short hash of the checked-out commit, or "unknown" outside a git
+    * checkout — the provenance stamp of every measurement artifact. */
+  private[graft] def gitCommit(): String =
+    try {
+      val p = new ProcessBuilder("git", "rev-parse", "--short", "HEAD")
+        .directory(new java.io.File(".")).start()
+      val h = new String(p.getInputStream.readAllBytes(),
+        java.nio.charset.StandardCharsets.UTF_8).trim
+      p.waitFor(); if (h.nonEmpty) h else "unknown"
+    } catch { case _: Throwable => "unknown" }
+
   /** Absolute delivered-CPU-speed anchor shared by the measurement mains
     * (Bench per pass, StreamCurve per cell): a fixed single-thread serial
     * integer workload whose Mops/s reflects the host's ACTUAL clock at
@@ -530,17 +541,9 @@ object ScaleBench {
     }
     // Provenance stamp: the r04/r06 artifacts were distinguishable only by
     // filename — bake the producing commit + round into the payload.
-    val gitHash =
-      try {
-        val p = new ProcessBuilder("git", "rev-parse", "--short", "HEAD")
-          .directory(new java.io.File(".")).start()
-        val h = new String(p.getInputStream.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8).trim
-        p.waitFor(); if (h.nonEmpty) h else "unknown"
-      } catch { case _: Throwable => "unknown" }
     val round = sys.env.getOrElse("SPARK_GRAFT_ROUND", "")
     val roundStamp = if (round.nonEmpty) s""","round":$round""" else ""
-    val json = s"""{"mode":"$mode","src":"$srcDir","git":"$gitHash"$roundStamp,"factors":[${factors.mkString(",")}],"queries":{${lines.mkString(",")}}}"""
+    val json = s"""{"mode":"$mode","src":"$srcDir","git":"${gitCommit()}"$roundStamp,"factors":[${factors.mkString(",")}],"queries":{${lines.mkString(",")}}}"""
     println(json)
     val out = s"/tmp/graftscale/scale_results_$mode.json"
     java.nio.file.Files.write(java.nio.file.Paths.get(out),

@@ -905,6 +905,12 @@ object Dedup {
 
   // ----------------------------------------------------- embedding near-dup
 
+  /** The round-6 cosine every embedding pair kernel shares with its
+    * oracle: a zero-norm side scores 0.0, otherwise dot / (na·nb), rounded
+    * to 6 dp before any threshold or ordering. */
+  private[graft] def cosineCol(dot: Column, na: Column, nb: Column): Column =
+    round(when(na === 0.0 || nb === 0.0, lit(0.0)).otherwise(dot / (na * nb)), 6)
+
   /** Embedding cosine near-dup pairs (cosine ≥ threshold). Brute-force
     * variant — O(n²), exact; only for candidate sets / verification (the
     * scale path is the LSH variant below). One side is broadcast and the
@@ -1038,35 +1044,32 @@ object Dedup {
   }
 
   // ------------------------------------------ byte-quantized prefilter
-  // (VERDICT r16 task #6, reference semantics:
-  // sparse/quantization/ByteQuantizer.java:25-34 — linear scale-to-byte
-  // against a ceiling, exact-rescore protocol; the ceiling here is
-  // PER-VECTOR max-|component| because dense embeddings are signed where
-  // the reference's sparse weights sit in [0, ceil=3.0]). The prefilter
-  // joins a 64-BYTE quantized copy + 2 floats instead of the 64-FLOAT
-  // vector into the candidate-pair verification, keeps every pair whose
-  // quantized-cosine UPPER BOUND clears the threshold, and exact-rescores
-  // survivors against the float vectors — provably lossless (the margin
-  // is a Cauchy-Schwarz bound on the dequantization error, spec-pinned in
-  // Round17Spec), so outputs are bit-identical with it on or off.
+  // Reference semantics: sparse/quantization/ByteQuantizer.java:25-34 —
+  // linear scale-to-byte against a ceiling, then an exact rescore. The
+  // ceiling here is PER-VECTOR max-|component|, because dense embeddings
+  // are signed where the reference's sparse weights sit in [0, ceil=3.0].
+  // The prefilter joins a 64-BYTE quantized copy + 2 floats instead of the
+  // 64-FLOAT vector into candidate-pair verification, keeps every pair
+  // whose quantized-cosine UPPER BOUND clears the threshold, and rescores
+  // the survivors exactly against the float vectors. It is lossless (the
+  // margin is a Cauchy-Schwarz bound on the dequantization error,
+  // spec-pinned in Round17Spec), so outputs are bit-identical with it on
+  // or off. [[verifyCosine]] is the one place that runs it.
   //
-  // DEFAULT AUTO (r19 — VERDICT r18 #3, the approximate_threshold
-  // pattern): callers pass Some(true)/Some(false) to force, None to cut
-  // over on MEASURED candidate volume. At gate scale (sf0.1, ~17k
-  // candidate pairs) the query cost is Spark job/stage count, not
-  // per-pair bytes — the prefilter's two extra joins cost more than the
-  // narrow payload saves (measured r17, SCALE.md: gate 4.27 s off /
-  // 4.37 s on) — while at volume (r17 cell: 50k base + 5k delta,
-  // ~8M candidates) it measured 0.36×. The auto cutover engages at
-  // [[QuantAutoMinPairs]] candidate pairs: safely above the measured
-  // flat/loss regime (~2×10⁴) and safely below the measured 2.8× win
-  // (~8×10⁶), where the per-pair savings dominate the two extra joins'
-  // fixed stage cost. The batch forms estimate the volume from the
-  // bucket-population distribution (Σ C(pop, 2) — exactly the pair count
-  // the bucket join materializes) in one aggregation, and only bother
-  // past [[QuantAutoProbeMinIds]] ids so gate-scale corpora never pay
-  // the probe job; the delta path reads |candGid| off an action it
-  // already runs (zero extra jobs — see EmbeddingIndex).
+  // ONE AUTO RULE ([[quantOn]]): Some(true)/Some(false) force the
+  // prefilter; None engages it once the candidate volume — the row count
+  // of the verification join — reaches `quantAutoPairs`
+  // ([[QuantAutoMinPairs]] by default). At gate scale (sf0.1, ~17k
+  // candidate pairs) the cost is Spark job/stage count, and the two extra
+  // joins cost more than the narrow payload saves (SCALE.md: gate 4.27 s
+  // off / 4.37 s on); at volume (50k base + 5k delta, ~8M candidates) the
+  // prefilter measured 0.36×. The volume comes from one of two places:
+  //  - the batch forms: Σ C(pop, 2) over the pair-emitting bucket
+  //    populations ([[bucketPairVolume]] — one aggregation), probed only
+  //    past `quantAutoProbeIds` ids ([[QuantAutoProbeMinIds]]) so
+  //    gate-scale corpora never pay the probe job;
+  //  - the delta path: the exact |candGid|, read off an action it already
+  //    runs (zero extra jobs — see EmbeddingIndex).
 
   /** Auto cutover: engage the quant prefilter at this candidate-pair
     * volume (see the section doc for the measured calibration). */
@@ -1131,6 +1134,59 @@ object Dedup {
     na === 0.0 || nb === 0.0 || (est + margin >= lit(threshold - 1e-6))
   }
 
+  /** The prefilter's AUTO rule: a forced setting wins; otherwise engage at
+    * `autoPairs` candidate pairs. `volume` is evaluated only when nothing
+    * is forced. */
+  private[dedup] def quantOn(forced: Option[Boolean], autoPairs: Long)(
+      volume: => Long): Boolean =
+    forced.getOrElse(volume >= autoPairs)
+
+  /** Candidate volume of a (table, bucket) self-join: Σ C(pop, 2) over the
+    * bucket populations of `bucketed` (one row per id per table), leaving
+    * out buckets over `maxBucket` — they emit no pairs. One aggregation,
+    * summed overflow-free by [[probeStatsFromDfRel]]. */
+  private[graft] def bucketPairVolume(bucketed: DataFrame,
+      maxBucket: Option[Int]): Long = {
+    val p = probeStatsFromDfRel(
+      bucketed.groupBy(col("table"), col("bucket")).agg(count(lit(1)).as("df")),
+      0L, maxBucket.getOrElse(Int.MaxValue))
+    p.joinWork - p.hotJoinWork
+  }
+
+  /** The embedding near-dup verifier: candidate pairs (id_a, id_b) against
+    * one side relation (id, v, nrm, payload…). With `quant`, pairs first
+    * pass the byte-quantized keep-test and only the survivors join the
+    * float vectors; the exact [[cosineCol]] then decides. Returns
+    * (id_a, id_b, cosine) plus `p_a`, `p_b` per payload column `p`, for
+    * pairs with cosine ≥ threshold. */
+  private[dedup] def verifyCosine(cand: DataFrame, side: DataFrame, dim: Int,
+      threshold: Double, quant: Boolean, payload: Seq[String] = Nil): DataFrame = {
+    val kept =
+      if (!quant) cand
+      else {
+        val slim = side
+          .withColumn("__q", quantizeVecUdf(col("v")))
+          .select(col("id"), col("nrm"),
+            col("__q._1").as("qv"), col("__q._2").as("qs"))
+        def slimAs(s: String): DataFrame = slim.select(col("id").as(s"id_$s"),
+          col("qv").as(s"q_$s"), col("qs").as(s"s_$s"), col("nrm").as(s"n_$s"))
+        cand.join(slimAs("a"), "id_a").join(slimAs("b"), "id_b")
+          .where(quantKeepCond(dim, threshold,
+            col("q_a"), col("s_a"), col("n_a"),
+            col("q_b"), col("s_b"), col("n_b")))
+          .select(col("id_a"), col("id_b"))
+      }
+    def sideAs(s: String): DataFrame = side.select(Seq(col("id").as(s"id_$s"),
+      col("v").as(s"v_$s"), col("nrm").as(s"n_$s")) ++
+      payload.map(p => col(p).as(s"${p}_$s")): _*)
+    kept.join(sideAs("a"), "id_a").join(sideAs("b"), "id_b")
+      .withColumn("cosine", cosineCol(
+        VectorExpressions.dense_dot(col("v_a"), col("v_b")), col("n_a"), col("n_b")))
+      .where(col("cosine") >= threshold)
+      .select(Seq(col("id_a"), col("id_b"), col("cosine")) ++
+        payload.flatMap(p => Seq(col(s"${p}_a"), col(s"${p}_b"))): _*)
+  }
+
   /** `maxBucket`: hyperplane buckets holding more than `maxBucket` DISTINCT
     * ids (members of identical-vector groups each count — the id-level
     * population a flat non-grouped index would see) emit NO candidate
@@ -1159,9 +1215,6 @@ object Dedup {
     // groups by vector hash BEFORE bucketing and must not pair them)
     val keyed = df.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
       .where(col("v").isNotNull && size(col("v")) === dim)
-    def cosine(va: Column, na: Column, vb: Column, nb: Column): Column =
-      round(when(na === 0.0 || nb === 0.0, lit(0.0))
-        .otherwise(VectorExpressions.dense_dot(va, vb) / (na * nb)), 6)
     // CHEAP DUPLICATE PROBE gating the collapse machinery below: ONE
     // map-side-combinable aggregation over the vector hashes (partial
     // count-distinct per partition, no vector shuffle) decides the regime.
@@ -1170,6 +1223,11 @@ object Dedup {
     // benefit; replicated corpora keep the Σ C(b,2) collapse win.
     val nAll = keyed.agg(
       count(lit(1)).as("n"), countDistinct(xxhash64(col("v"))).as("nd")).head()
+    // the AUTO volume of either branch (see the prefilter section): the
+    // pair count its bucket join materializes, probed past the id floor
+    def quant(ids: Long, bucketed: DataFrame, cap: Option[Int]): Boolean =
+      quantOn(quantPrefilter, quantAutoPairs)(
+        if (ids < quantAutoProbeIds) 0L else bucketPairVolume(bucketed, cap))
     if (nAll.getLong(1) == nAll.getLong(0)) {
       // no duplicate vectors: bucket/verify directly over the corpus —
       // bucketPairs' population check IS the id-level maxBucket semantics
@@ -1178,47 +1236,8 @@ object Dedup {
       val bucketed = keyed
         .select(col("id"), posexplode(bucketUdf(col("v"))).as(Seq("table", "bucket")))
       val candidates = bucketPairs(bucketed, Seq("table", "bucket"), maxBucket)
-      // byte-quantized prefilter (see the section doc above): candidate
-      // pairs verify first against the 64-byte quantized copy + norm, and
-      // only survivors of the provably-safe bound join the float vectors
-      // for the exact rescore — lossless by construction. AUTO (None)
-      // estimates the candidate volume as Σ C(pop, 2) over the bucket
-      // populations — exactly the pair count the bucket join materializes
-      // (cap-respecting: over-cap buckets emit nothing) — in ONE
-      // aggregation, probed only past the tier-1 id floor so gate-scale
-      // corpora never pay the probe job.
-      val useQuant = quantPrefilter.getOrElse(
-        nAll.getLong(0) >= quantAutoProbeIds && {
-          val cap = maxBucket.map(_.toLong).getOrElse(Long.MaxValue)
-          val v = bucketed.groupBy(col("table"), col("bucket"))
-            .agg(count(lit(1)).as("__n"))
-            .where(col("__n") <= cap)
-            .agg(sum(col("__n") * (col("__n") - lit(1L)) / lit(2L))).head()
-          !v.isNullAt(0) && v.getLong(0) >= quantAutoPairs
-        })
-      val kept =
-        if (!useQuant) candidates
-        else {
-          val slim = vecs
-            .withColumn("__q", quantizeVecUdf(col("v")))
-            .select(col("id"), col("nrm"),
-              col("__q._1").as("qv"), col("__q._2").as("qs"))
-          candidates
-            .join(slim.select(col("id").as("id_a"), col("qv").as("q_a"),
-              col("qs").as("s_a"), col("nrm").as("n_a")), "id_a")
-            .join(slim.select(col("id").as("id_b"), col("qv").as("q_b"),
-              col("qs").as("s_b"), col("nrm").as("n_b")), "id_b")
-            .where(quantKeepCond(dim, threshold,
-              col("q_a"), col("s_a"), col("n_a"),
-              col("q_b"), col("s_b"), col("n_b")))
-            .select(col("id_a"), col("id_b"))
-        }
-      return kept
-        .join(vecs.select(col("id").as("id_a"), col("v").as("v_a"), col("nrm").as("n_a")), "id_a")
-        .join(vecs.select(col("id").as("id_b"), col("v").as("v_b"), col("nrm").as("n_b")), "id_b")
-        .withColumn("cosine", cosine(col("v_a"), col("n_a"), col("v_b"), col("n_b")))
-        .where(col("cosine") >= threshold)
-        .select(col("id_a"), col("id_b"), col("cosine"))
+      return verifyCosine(candidates, vecs, dim, threshold,
+        quant(nAll.getLong(0), bucketed, maxBucket))
     }
     // DUPLICATE-VECTOR COLLAPSE (the ngram rep-collapse, vector form):
     // identical embeddings have identical buckets AND identical cosine
@@ -1270,48 +1289,10 @@ object Dedup {
       case None => bucketed0
     }
     val candRep = bucketPairs(bucketed, Seq("table", "bucket"))
-    // the byte-quantized prefilter, collapse form (ADVICE r17 / VERDICT
-    // r17 #1 — the flag was silently ignored on this branch, exactly the
-    // replicated-corpus regime a duplication-heavy 100 TB ingest hits):
-    // candidate GROUP pairs verify against the 64-byte quantized copies
-    // first — one quantization per DISTINCT vector, cheaper still than the
-    // duplicate-free branch's per-id copy — and only survivors of the
-    // provably-safe bound join the full float vectors. Lossless by the
-    // quantKeepCond margin proof, so outputs are bit-identical either way.
-    // AUTO (None): tier-1 on the DISTINCT-vector count (reps is the join
-    // population under the collapse), then Σ C(pop, 2) over the surviving
-    // (post-hot-anti-join) rep-level bucket populations — exactly candRep's
-    // pre-dedup row count.
-    val useQuantRep = quantPrefilter.getOrElse(
-      nAll.getLong(1) >= quantAutoProbeIds && {
-        val v = bucketed.groupBy(col("table"), col("bucket"))
-          .agg(count(lit(1)).as("__n"))
-          .agg(sum(col("__n") * (col("__n") - lit(1L)) / lit(2L))).head()
-        !v.isNullAt(0) && v.getLong(0) >= quantAutoPairs
-      })
-    val candRepKept =
-      if (!useQuantRep) candRep
-      else {
-        val slim = repVecs
-          .withColumn("__q", quantizeVecUdf(col("v")))
-          .select(col("id"), col("nrm"),
-            col("__q._1").as("qv"), col("__q._2").as("qs"))
-        candRep
-          .join(slim.select(col("id").as("id_a"), col("qv").as("q_a"),
-            col("qs").as("s_a"), col("nrm").as("n_a")), "id_a")
-          .join(slim.select(col("id").as("id_b"), col("qv").as("q_b"),
-            col("qs").as("s_b"), col("nrm").as("n_b")), "id_b")
-          .where(quantKeepCond(dim, threshold,
-            col("q_a"), col("s_a"), col("n_a"),
-            col("q_b"), col("s_b"), col("n_b")))
-          .select(col("id_a"), col("id_b"))
-      }
-    val repPairs = candRepKept
-      .join(repVecs.select(col("id").as("id_a"), col("v").as("v_a"), col("nrm").as("n_a")), "id_a")
-      .join(repVecs.select(col("id").as("id_b"), col("v").as("v_b"), col("nrm").as("n_b")), "id_b")
-      .withColumn("cosine", cosine(col("v_a"), col("n_a"), col("v_b"), col("n_b")))
-      .where(col("cosine") >= threshold)
-      .select(col("id_a"), col("id_b"), col("cosine"))
+    // under the collapse the verification join's population is the
+    // DISTINCT vectors, and the hot buckets are already anti-joined out
+    val repPairs = verifyCosine(candRep, repVecs, dim, threshold,
+      quant(nAll.getLong(1), bucketed, None))
     // within-group pairs: cosine computed from the SAME expression with
     // both sides the group vector (≡ what the pair path would emit —
     // round-6 float arithmetic, zero-norm groups score 0.0 and drop out)
@@ -1323,7 +1304,8 @@ object Dedup {
       else within0
     val within = within1
       .withColumn("nrm", sqrt(VectorExpressions.dense_dot(col("v"), col("v"))))
-      .withColumn("cosine", cosine(col("v"), col("nrm"), col("v"), col("nrm")))
+      .withColumn("cosine", cosineCol(VectorExpressions.dense_dot(col("v"), col("v")),
+        col("nrm"), col("nrm")))
       .where(col("cosine") >= threshold)
       .select(explode(withinPairsUdf(col("members"))).as("p"), col("cosine"))
       .select(col("p._1").as("id_a"), col("p._2").as("id_b"), col("cosine"))
@@ -2100,10 +2082,8 @@ object Dedup {
         sqrt(VectorExpressions.dense_dot(col(vecCol), col(vecCol))).as(n))
     side(train, "train_id", "v_a", "n_a")
       .crossJoin(broadcast(side(bench, "bench_id", "v_b", "n_b")))
-      .withColumn("cosine",
-        round(when(col("n_a") === 0.0 || col("n_b") === 0.0, lit(0.0))
-          .otherwise(VectorExpressions.dense_dot(col("v_a"), col("v_b")) /
-            (col("n_a") * col("n_b"))), 6))
+      .withColumn("cosine", cosineCol(
+        VectorExpressions.dense_dot(col("v_a"), col("v_b")), col("n_a"), col("n_b")))
       .where(col("cosine") >= threshold)
       .select(col("train_id"), col("bench_id"), col("cosine"))
   }
@@ -2170,10 +2150,8 @@ object Dedup {
     val repPairs = cand
       .join(withNorm(tRel, "train_id", "v_a", "n_a"), "train_id")
       .join(broadcast(withNorm(bRel, "bench_id", "v_b", "n_b")), "bench_id")
-      .withColumn("cosine",
-        round(when(col("n_a") === 0.0 || col("n_b") === 0.0, lit(0.0))
-          .otherwise(VectorExpressions.dense_dot(col("v_a"), col("v_b")) /
-            (col("n_a") * col("n_b"))), 6))
+      .withColumn("cosine", cosineCol(
+        VectorExpressions.dense_dot(col("v_a"), col("v_b")), col("n_a"), col("n_b")))
       .where(col("cosine") >= threshold)
       .select(col("train_id"), col("bench_id"), col("cosine"))
     // expand collapsed members back to ids on whichever sides collapsed

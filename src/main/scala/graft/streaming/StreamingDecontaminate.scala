@@ -91,8 +91,7 @@ object StreamingDecontaminate {
       .join(broadcast(benchLshBuckets(bench, planes, vecCol, idCol)),
         Seq("table", "bucket"))
       .withColumn("cosine",
-        round(when(col("na") === 0.0 || col("nb") === 0.0, lit(0.0))
-          .otherwise(dot(col("va"), col("vb")) / (col("na") * col("nb"))), 6))
+        Dedup.cosineCol(dot(col("va"), col("vb")), col("na"), col("nb")))
       .where(col("cosine") >= threshold)
       .groupBy(col("train_id"), col("bench_id"))
       .agg(max(col("cosine")).as("cosine"))

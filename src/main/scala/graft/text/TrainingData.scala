@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.dedup.Dedup
 import graft.ml.HashEmbedder
 
 /** Training-data pipeline operators beyond the reference's search surface:
@@ -157,8 +158,7 @@ object TrainingData {
       .withColumn("__nv", sqrt(VectorExpressions.dense_dot(vd, vd)))
       .withColumn("__nc", sqrt(VectorExpressions.dense_dot(col("__cent"), col("__cent"))))
       .withColumn("centroid_cos",
-        round(when(col("__nv") === 0.0 || col("__nc") === 0.0, lit(0.0))
-          .otherwise(col("__dot") / (col("__nv") * col("__nc"))), 6))
+        Dedup.cosineCol(col("__dot"), col("__nv"), col("__nc")))
       .select(col(idCol), col(groupCol), col("centroid_cos"),
         (col("centroid_cos") < threshold).as("is_outlier"))
   }

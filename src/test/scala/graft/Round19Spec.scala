@@ -18,7 +18,10 @@ import graft.dedup.{Dedup, EmbeddingIndex}
   * forced-off}, the cutover ENGAGES past the threshold (byte_dot in the
   * physical plan when the thresholds are lowered under the fixture's
   * volume), and the cutover STAYS OFF below it (no byte_dot at default
-  * thresholds on the same tiny fixture). */
+  * thresholds on the same tiny fixture). Each batch branch also runs at
+  * the default thresholds on a spark.range corpus past the id floor, so
+  * the volume probe itself executes, and the probe's Σ C(pop, 2) is
+  * checked against a driver-side sum over the same buckets. */
 class Round19Spec extends SparkSpec {
   import spark.implicits._
 
@@ -61,6 +64,25 @@ class Round19Spec extends SparkSpec {
     }
   }
 
+  /** `n` ids over spark.range at a size only the volume probe sees: id i
+    * carries vector k = i % distinct, hash-derived from k / 2 with odd k
+    * nudged on one component, so every vector has a near-duplicate partner
+    * and ids past `distinct` repeat an earlier vector. */
+  private def rangeVectors(n: Long, distinct: Long, dim: Int) = {
+    val k = col("id") % distinct
+    spark.range(n).select(col("id").as("vec_id"), array((0 until dim).map { j =>
+      val x = (pmod(xxhash64(floor(k / 2), lit(j)), lit(2001L)) - 1000L)
+        .cast("double") / 1000.0
+      (if (j == 0) x + (k % 2) * 0.02 else x).cast("float")
+    }: _*).as("embedding"))
+  }
+
+  /** The Σ C(pop, 2) the bucket join materializes, summed on the driver
+    * over the populations of `bucketed` that are at most `cap`. */
+  private def driverVolume(bucketed: org.apache.spark.sql.DataFrame, cap: Long): Long =
+    bucketed.groupBy(col("table"), col("bucket")).count().collect()
+      .map(_.getLong(2)).filter(_ <= cap).map(p => p * (p - 1) / 2).sum
+
   test("quant auto cutover, duplicate-free branch: engages past threshold, off below, output-identical") {
     val dim = 16
     val vecs = distinctVectors(19001L, 30, dim).toDF("vec_id", "embedding")
@@ -79,6 +101,34 @@ class Round19Spec extends SparkSpec {
     assert(hasByteDot(autoOn), "auto cutover did not engage past threshold")
     assert(!hasByteDot(autoOff), "auto engaged below the default thresholds")
     assert(!hasByteDot(forcedOff), "forced-off plan contains byte_dot")
+
+    // the DEFAULT thresholds past the id floor: the volume probe runs, the
+    // bucket volume stays under QuantAutoMinPairs, the prefilter stays off
+    val bigDim = 16
+    val big = rangeVectors(Dedup.QuantAutoProbeMinIds + 2,
+      Dedup.QuantAutoProbeMinIds + 2, bigDim)
+    def runBig(qp: Option[Boolean]) =
+      Dedup.embeddingNearDupLsh(big, dim = bigDim, threshold = 0.9,
+        nbits = 12, tables = 4, quantPrefilter = qp)
+    val bigAuto = runBig(None)
+    assert(pairSet(bigAuto).nonEmpty, "range fixture must produce pairs")
+    assert(pairSet(bigAuto) == pairSet(runBig(Some(false))),
+      "default-threshold auto output drifted")
+    assert(!hasByteDot(bigAuto), "auto engaged under QuantAutoMinPairs")
+
+    // the shared volume equals the driver's Σ C(pop, 2) over the same
+    // buckets, with the fullest bucket over maxBucket and left out
+    val bucketed = big.select(col("vec_id").as("id"), posexplode(
+      Dedup.lshBucketCol(col("embedding"), Dedup.lshPlanes(4, 12, bigDim, 42L)))
+      .as(Seq("table", "bucket")))
+    val maxPop = bucketed.groupBy(col("table"), col("bucket")).count()
+      .agg(max(col("count"))).head().getLong(0)
+    val cap = (maxPop - 1).toInt
+    val volume = Dedup.bucketPairVolume(bucketed, Some(cap))
+    assert(volume == driverVolume(bucketed, cap), "bucket volume drifted")
+    assert(volume < driverVolume(bucketed, Long.MaxValue), "no bucket over the cap")
+    assert(volume > 0L && volume < Dedup.QuantAutoMinPairs,
+      s"fixture volume $volume outside (0, QuantAutoMinPairs)")
   }
 
   test("quant auto cutover, duplicate-collapse branch: engages past threshold, off below, output-identical") {
@@ -96,6 +146,21 @@ class Round19Spec extends SparkSpec {
     assert(pairSet(autoOn) == pairSet(autoOff), "collapse auto-off output drifted")
     assert(hasByteDot(autoOn), "collapse auto cutover did not engage")
     assert(!hasByteDot(autoOff), "collapse auto engaged below default thresholds")
+
+    // the DEFAULT thresholds past the id floor on the DISTINCT-vector count
+    // (the collapse branch's join population): the probe runs over the
+    // rep-level buckets and keeps the prefilter off
+    val bigDim = 16
+    val distinct = Dedup.QuantAutoProbeMinIds + 2
+    val big = rangeVectors(distinct + 600, distinct, bigDim)
+    def runBig(qp: Option[Boolean]) =
+      Dedup.embeddingNearDupLsh(big, dim = bigDim, threshold = 0.9,
+        nbits = 12, tables = 4, quantPrefilter = qp)
+    val bigAuto = runBig(None)
+    assert(pairSet(bigAuto).nonEmpty, "range fixture must produce pairs")
+    assert(pairSet(bigAuto) == pairSet(runBig(Some(false))),
+      "collapse default-threshold auto output drifted")
+    assert(!hasByteDot(bigAuto), "collapse auto engaged under QuantAutoMinPairs")
   }
 
   test("quant auto cutover, delta path: engages past threshold, off below, output-identical") {

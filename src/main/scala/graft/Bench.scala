@@ -249,7 +249,7 @@ object Bench {
     // per-query map + scaling inline — goes ONLY to the side file, and stdout
     // ends with a ≤1 KB summary whose "detail" points at it.
     val full = s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":$qs,"sf":"$sfDir",""" +
-      s""""commit":"${ScaleBench.gitCommit()}","cpus":$cpus,""" +
+      s""""commit":"${ScaleBench.gitCommit()}","dirty":${ScaleBench.gitDirty()},"cpus":$cpus,""" +
       s""""contention_other_steal":$contQs,"load1":[${passLoads.map(num).mkString(",")}],""" +
       s""""cpu_ref_mops":[${cpuRefs.map(num).mkString(",")}],""" +
       s""""cpu_ref_mops_median":${num(refSingleMed)},""" +
@@ -266,8 +266,8 @@ object Bench {
     // output file: a fixed path let any later run (an 8-core scaling run,
     // a profile) clobber the 32-core run's per-query map. Runs at
     // different core counts coexist; the summary line's "detail" names
-    // the file for this run, and the file itself carries commit, cpus
-    // and sf.
+    // the file for this run, and the file itself carries commit, dirty
+    // (uncommitted tracked changes), cpus and sf.
     val sfName = new java.io.File(sfDir).getName.replaceAll("[^A-Za-z0-9._-]", "_")
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       s"bench_detail_c${cpus}_$sfName.json")

@@ -166,16 +166,28 @@ object ScaleBench {
     new java.io.File(fs, "_DONE").createNewFile()
   }
 
+  /** Trimmed stdout of `git <args>` in the working directory, or None
+    * when git is absent or fails (e.g. outside a checkout). */
+  private def git(args: String*): Option[String] =
+    try {
+      val p = new ProcessBuilder(("git" +: args): _*)
+        .directory(new java.io.File(".")).start()
+      val out = new String(p.getInputStream.readAllBytes(),
+        java.nio.charset.StandardCharsets.UTF_8).trim
+      if (p.waitFor() == 0) Some(out) else None
+    } catch { case _: Throwable => None }
+
   /** Short hash of the checked-out commit, or "unknown" outside a git
     * checkout — the provenance stamp of every measurement artifact. */
   private[graft] def gitCommit(): String =
-    try {
-      val p = new ProcessBuilder("git", "rev-parse", "--short", "HEAD")
-        .directory(new java.io.File(".")).start()
-      val h = new String(p.getInputStream.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim
-      p.waitFor(); if (h.nonEmpty) h else "unknown"
-    } catch { case _: Throwable => "unknown" }
+    git("rev-parse", "--short", "HEAD").filter(_.nonEmpty).getOrElse("unknown")
+
+  /** JSON stamp next to [[gitCommit]]: `true` when tracked files differ
+    * from that commit (the run measured code the commit lacks), `null`
+    * outside a git checkout. Untracked files do not count. */
+  private[graft] def gitDirty(): String =
+    git("status", "--porcelain", "--untracked-files=no")
+      .fold("null")(s => s.nonEmpty.toString)
 
   /** Absolute delivered-CPU-speed anchor shared by the measurement mains
     * (Bench per pass, StreamCurve per cell): a fixed single-thread serial

@@ -4,9 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Shared per-batch cluster-assignment fold for the streaming dedup legs
-  * ([[MinhashIndex.ingestStreamClustered]] and its winnow/embedding
-  * siblings). The fold is LEG-AGNOSTIC — it consumes (id_a, id_b) pairs,
-  * so any near-duplicate pair producer plugs in (the reference's ingest
+  * (every `ingestStreamClustered`, through [[NearDupIndex.foldInto]]).
+  * The fold is LEG-AGNOSTIC — it consumes (id_a, id_b) pairs, so any
+  * near-duplicate pair producer plugs in (the reference's ingest
   * processors are similarly chained per flush regardless of which
   * fingerprint produced the match, e.g.
   * processor/TextEmbeddingProcessor.java:79 runs per indexed batch).
@@ -85,7 +85,7 @@ private[graft] object ClusterFold {
 
   /** Target rows per snapshot partition (matches [[IndexMeta.autoParts]]);
     * a fold compacts when rows exceed 2 × target × nPart. Exposed so the
-    * ingest loops can thread caller overrides through to [[foldBatch]]. */
+    * ingest loop can thread caller overrides through to [[foldBatch]]. */
   private[graft] val TargetRows = 262144L
 
   /** Grid clamp (matches [[IndexMeta.autoParts]]'s default): past it the

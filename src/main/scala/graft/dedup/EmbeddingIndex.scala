@@ -34,7 +34,7 @@ import graft.functions.VectorExpressions
   * candidate gid set broadcast; the index postings and sketches are each
   * scanned ONCE and never shuffled — the [[MinhashIndex.deltaPairs]]
   * contract, now on group-level relations. */
-object EmbeddingIndex {
+object EmbeddingIndex extends NearDupIndex {
 
   /** `stablePlanes`: resolution-scaled indexes ([[writeScaled]]) use the
     * prefix-stable per-table plane family ([[Dedup.lshPlanesStable]]) so
@@ -77,8 +77,8 @@ object EmbeddingIndex {
     b
   }
 
-  private def postingsDir(path: String) = s"$path/postings"
-  private def sketchesDir(path: String) = s"$path/sketches"
+  protected def leafDirs(path: String): Seq[String] =
+    Seq(postingsDir(path), sketchesDir(path))
 
   // hash-partitioned layout (the SparseRetrieval.writePostingsIndex
   // protocol — VERDICT r12 task #1): postings partition on the
@@ -211,30 +211,6 @@ object EmbeddingIndex {
     sketches.unpersist(blocking = false)
   }
 
-  /** Offline maintenance: merge partition leaves that accumulated more
-    * than `maxFiles` append files ([[IndexCompaction]]). Throws while a
-    * streaming session holds the index lock — see
-    * [[MinhashIndex.compact]]. */
-  def compact(spark: SparkSession, path: String, maxFiles: Int = 8): Int = {
-    IndexMeta.assertUnlocked(path, "compact")
-    compactLeaves(spark, path, maxFiles)
-  }
-
-  private def compactLeaves(spark: SparkSession, path: String, maxFiles: Int): Int =
-    IndexCompaction.compactDir(spark, postingsDir(path), maxFiles) +
-      IndexCompaction.compactDir(spark, sketchesDir(path), maxFiles)
-
-  /** Clear a crashed streaming session's stale [[IndexMeta.LockFile]] —
-    * see [[MinhashIndex.forceUnlock]]. */
-  def forceUnlock(dir: String): Unit = IndexMeta.unlock(dir)
-
-  /** Crash-debris repair for the index's partition leaves
-    * ([[IndexCompaction.repairDir]]) — see [[MinhashIndex.repair]]. */
-  def repair(path: String): Unit = {
-    IndexCompaction.repairDir(postingsDir(path))
-    IndexCompaction.repairDir(sketchesDir(path))
-  }
-
   /** Diagnostic: the partition-pruned postings slice a delta's buckets
     * touch — the pure INDEX-READ floor of [[deltaPairs]] (everything else
     * it reads is candidate-driven: the sketches of candidate gids, pruned
@@ -259,31 +235,17 @@ object EmbeddingIndex {
       vecCol: String = "embedding", idCol: String = "vec_id",
       threshold: Double = 0.95, maxBucket: Option[Int] = None,
       quantPrefilter: Option[Boolean] = None,
-      quantAutoPairs: Long = Dedup.QuantAutoMinPairs): DataFrame = {
-    val m = readMeta(path)
-    val dSk = sketchesOf(delta, vecCol, idCol).persist()
-    // persisted: three parallel broadcast builds consume dPost (the bucket
-    // UDF would race-recompute); both caches fill inside
-    // deltaPairsSketched's first action (the pruned read's pbs collect) —
-    // the delta groupBy and the bucket UDF each run exactly once
-    val dPost = postingsOf(dSk, m).persist()
-    val out = deltaPairsSketched(spark, path, m, dSk, dPost, threshold,
-      maxBucket, quantPrefilter, quantAutoPairs)
-    dSk.unpersist(blocking = false)
-    dPost.unpersist(blocking = false)
-    out
-  }
+      quantAutoPairs: Long = Dedup.QuantAutoMinPairs): DataFrame =
+    prepared(path, vecCol, idCol, threshold, maxBucket, quantPrefilter,
+      quantAutoPairs)(spark, delta).pairsOnly()
 
-  /** [[deltaPairs]] over a pre-sketched delta — the streaming ingest loop
-    * sketches each batch ONCE and feeds both the pair search and the index
-    * append. Inputs arrive PERSISTED and fill inside the first action here
-    * (the pruned read's pbs collect); the caller releases them (the
-    * returned relation is materialized before return). */
+  /** [[deltaPairs]] over a [[prepared]] delta. Inputs arrive PERSISTED;
+    * the caller releases them (the returned relation is materialized
+    * before return). */
   private def deltaPairsSketched(spark: SparkSession, path: String, m: Meta,
       dSk: DataFrame, dPost: DataFrame,
       threshold: Double, maxBucket: Option[Int],
-      quantPrefilter: Option[Boolean] = None,
-      quantAutoPairs: Long = Dedup.QuantAutoMinPairs): DataFrame = {
+      quantPrefilter: Option[Boolean], quantAutoPairs: Long): DataFrame = {
     // partition-pruned index scan: only the delta-touched buckets' files
     val postings = readPostingsPruned(spark, path, m, dPost)
 
@@ -470,130 +432,61 @@ object EmbeddingIndex {
           Dedup.crossPairsUdf(col("om_a"), col("nm_b")))).as("p"),
         col("cosine"))
       .select(col("p._1").as("id_a"), col("p._2").as("id_b"), col("cosine"))
-    // dSk/dPost are caller-owned and released by the wrapper/stream loop
+    // dSk/dPost are caller-owned (the Batch's caches)
     Dedup.finishReleasing(within.unionByName(cross),
       candGid, needIdx, groups, matched)
   }
 
-  /** Streaming semantic-dedup ingest: every micro-batch is checked against
-    * the index ([[deltaPairs]]), its pairs appended under `outDir`, and the
-    * batch folded in — [[MinhashIndex.ingestStream]] on the embedding leg.
-    * BATCHING-INVARIANT: a pair surfaces exactly when its later side
-    * arrives (cross-batch members merge through the group-keyed sketches),
-    * and cosine is deterministic, so streaming a corpus from an empty
-    * index reproduces `embeddingNearDupLsh(corpus)` however the stream is
-    * chopped (spec-pinned; the q_stream_dedup_embedding gate rides
-    * q_dedup_embedding_lsh's oracle verbatim on this property). A
-    * maxBucket cap would not be batching-invariant (populations evolve),
-    * so it is intentionally not exposed here. foreachBatch is
-    * at-least-once: replayed sketches/postings are absorbed by the
-    * read-side member dedup and candidate dedup, and replayed pair rows
-    * agree — read `outDir` with dropDuplicates(id_a, id_b). */
+  /** Streaming semantic-dedup ingest ([[NearDupIndex.ingest]]): each
+    * micro-batch's pairs are appended under `outDir`. Batching-invariant
+    * because cross-batch members merge through the group-keyed sketches
+    * and cosine is deterministic; a `maxBucket` cap is not (populations
+    * evolve as batches land), so it is not exposed. */
   def ingestStream(stream: DataFrame, path: String, outDir: String,
       vecCol: String = "embedding", idCol: String = "vec_id",
-      threshold: Double = 0.95, compactEvery: Int = 0): Unit = {
-    val lockOwner = s"$path/_checkpoint"
-    IndexMeta.lock(path, lockOwner)
-    try {
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, epoch: Long) =>
-          // sketch the batch ONCE: the cached group relation feeds the pair
-          // search AND both index appends
-          repair(path) // crashed-compact debris (possibly another
-          // session's), BEFORE the pruned read: a retired leaf reads as
-          // empty and the next append would make the loss permanent
-          val m = readMeta(path)
-          val dSk = sketchesOf(batch, vecCol, idCol).persist()
-          val dPost = postingsOf(dSk, m).persist() // fills in the pruned read
-          val pairs = deltaPairsSketched(batch.sparkSession, path, m, dSk,
-            dPost, threshold, None)
-          pairs.write.mode("append").parquet(outDir)
-          writeSketches(dSk, path, m, "append")
-          writePostings(dPost, path, m, "append")
-          if (compactEvery > 0 && (epoch + 1) % compactEvery == 0)
-            compactLeaves(batch.sparkSession, path, 8)
-          dSk.unpersist(blocking = false)
-          dPost.unpersist(blocking = false)
-          pairs.unpersist(blocking = false) // the per-batch result cache
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", s"$path/_checkpoint")
-        .start()
-      q.awaitTermination()
-    } finally IndexMeta.unlock(path, lockOwner)
-  }
+      threshold: Double = 0.95, compactEvery: Int = 0): Unit =
+    ingest(stream, path, compactEvery, NearDupIndex.pairsTo(outDir))(
+      prepared(path, vecCol, idCol, threshold))
 
-  /** The full streaming semantic-dedup pipeline: per micro-batch, the
-    * arriving vectors are checked against the index ([[deltaPairs]]), the
-    * batch folded in, AND the cluster assignment incrementally maintained
-    * — [[MinhashIndex.ingestStreamClustered]] on the embedding leg, via
-    * the same leg-agnostic [[ClusterFold]]. The pair stream is
-    * batching-invariant (cross-batch members merge through the
-    * group-keyed sketches, cosine is deterministic), so streaming a
-    * corpus from an empty index publishes the same assignment
-    * whole-corpus `resolveClusters(embeddingNearDupLsh(corpus))` produces
-    * (per-batch CC identity, induction over batches — spec-pinned). */
-
-  /** `compactEvery` > 0 merges oversized partition leaves every N epochs
-    * ([[compact]]) — safe in-loop: foreachBatch is the index's only
-    * writer, so the swap's momentary leaf absence has no reader to race;
-    * a replayed epoch re-compacts idempotently. 0 = offline-only. */
+  /** [[ingestStream]] maintaining the cluster assignment under
+    * `clustersDir` instead ([[NearDupIndex.foldInto]]) — at every point in
+    * the stream it equals `resolveClusters(embeddingNearDupLsh(seen))`. */
   def ingestStreamClustered(stream: DataFrame, path: String,
       clustersDir: String, vecCol: String = "embedding",
       idCol: String = "vec_id", threshold: Double = 0.95,
       compactEvery: Int = 0,
       foldTargetRows: Long = ClusterFold.TargetRows,
-      foldMaxParts: Int = ClusterFold.MaxParts): Unit = {
-    val lockOwner = s"$path/_checkpoint"
-    IndexMeta.lock(path, lockOwner); IndexMeta.lock(clustersDir, lockOwner)
-    try {
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, epoch: Long) =>
-          repair(path) // crashed-compact debris (possibly another
-          // session's), BEFORE the pruned read: a retired leaf reads as
-          // empty and the next append would make the loss permanent
-          val m = readMeta(path)
-          val dSk = sketchesOf(batch, vecCol, idCol).persist()
-          val dPost = postingsOf(dSk, m).persist() // fills in the pruned read
-          val pairs = deltaPairsSketched(batch.sparkSession, path, m, dSk,
-            dPost, threshold, None)
-          ClusterFold.foldBatch(batch.sparkSession, clustersDir, epoch, pairs,
-            batch.select(col(idCol).cast("long").as("id")).distinct(),
-            targetRows = foldTargetRows, maxParts = foldMaxParts)
-          writeSketches(dSk, path, m, "append")
-          writePostings(dPost, path, m, "append")
-          if (compactEvery > 0 && (epoch + 1) % compactEvery == 0)
-            compactLeaves(batch.sparkSession, path, 8)
-          dSk.unpersist(blocking = false)
-          dPost.unpersist(blocking = false)
-          pairs.unpersist(blocking = false)
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", s"$path/_checkpoint")
-        .start()
-      q.awaitTermination()
-    } finally { IndexMeta.unlock(clustersDir, lockOwner); IndexMeta.unlock(path, lockOwner) }
-  }
+      foldMaxParts: Int = ClusterFold.MaxParts): Unit =
+    ingest(stream, path, compactEvery,
+      NearDupIndex.foldInto(clustersDir, idCol, foldTargetRows, foldMaxParts))(
+      prepared(path, vecCol, idCol, threshold))
 
-  /** The STORED rows of the assignment maintained by
-    * [[ingestStreamClustered]] — members of multi-member clusters only;
-    * singletons are implicit ([[ClusterFold.storedClusters]]). */
-  def storedClusters(spark: SparkSession, clustersDir: String): DataFrame =
-    ClusterFold.storedClusters(spark, clustersDir)
+  /** Sketch the delta ONCE: the cached group relation feeds the pair
+    * search AND both index appends. dPost is persisted because three
+    * parallel broadcast builds consume it (the bucket UDF would
+    * race-recompute); both caches fill inside [[deltaPairsSketched]]'s
+    * first action (the pruned read's pbs collect) — the delta groupBy and
+    * the bucket UDF each run exactly once. */
+  private def prepared(path: String, vecCol: String, idCol: String,
+      threshold: Double, maxBucket: Option[Int] = None,
+      quantPrefilter: Option[Boolean] = None,
+      quantAutoPairs: Long = Dedup.QuantAutoMinPairs)(
+      spark: SparkSession, delta: DataFrame): NearDupIndex.Batch = {
+    val m = readMeta(path)
+    val dSk = sketchesOf(delta, vecCol, idCol).persist()
+    val dPost = postingsOf(dSk, m).persist()
+    NearDupIndex.Batch(Seq(dSk, dPost),
+      () => deltaPairsSketched(spark, path, m, dSk, dPost, threshold,
+        maxBucket, quantPrefilter, quantAutoPairs),
+      () => {
+        writeSketches(dSk, path, m, "append")
+        writePostings(dPost, path, m, "append")
+      })
+  }
 
   /** The full relation over `allIds` — stored multi-member clusters plus
     * the implicit singletons (absent id = own cluster). */
   def currentClustersFull(spark: SparkSession, clustersDir: String,
       allIds: DataFrame): DataFrame =
     ClusterFold.currentClustersFull(spark, clustersDir, allIds)
-
-  /** Offline snapshot-debris sweep for the cluster assignment this
-    * module's [[ingestStreamClustered]] maintains — deletes every
-    * partition leaf/epoch dir referenced by neither CURRENT nor PREVIOUS
-    * (the per-publish GC is incremental and a crashed publish can orphan
-    * debris only a full listing finds). Run between streaming sessions,
-    * like [[compact]]. */
-  def sweepClusters(clustersDir: String): Unit = ClusterFold.sweep(clustersDir)
 }

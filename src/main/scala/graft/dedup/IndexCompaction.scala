@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** File-count compaction for the written dedup indexes' Hive-partitioned
   * relations (`postings/pb=k`, `sketches/sb=k`).
   *
-  * Why it exists: the streaming ingest loops append one file per touched
+  * Why it exists: the streaming ingest loop appends one file per touched
   * partition per micro-batch ([[MinhashIndex.append]] and siblings bound
   * the count with a repartition, but never merge), so over thousands of
   * micro-batches the per-directory file COUNT grows without bound and the
@@ -41,10 +41,9 @@ private[graft] object IndexCompaction {
     * without the restore a pruned read would silently treat the partition
     * as EMPTY, permanently dropping its pairs on the replayed batch), and
     * drop stale `.compact_` pre-swap copies. Idempotent, one listing.
-    * [[compactDir]] runs it implicitly; the streaming ingest loops with
-    * `compactEvery > 0` must run it at the START of every batch, because
-    * the replayed epoch's delta read happens BEFORE its end-of-batch
-    * compact would repair (ADVICE r14). */
+    * [[compactDir]] runs it implicitly; the streaming ingest loop runs it
+    * at the START of every batch, because the replayed epoch's delta read
+    * happens BEFORE its end-of-batch compact would repair. */
   def repairDir(dir: String): Unit = {
     import org.apache.hadoop.fs.Path
     val root = new Path(dir)

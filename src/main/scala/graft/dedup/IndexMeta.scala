@@ -90,8 +90,8 @@ private[graft] object IndexMeta {
       .asInstanceOf[org.apache.spark.sql.types.StructType]
 
   /** Live-stream marker guarding the offline maintenance tools. The
-    * streaming ingest loops take it for their index/snapshot dirs and
-    * release it on termination; [[assertUnlocked]] makes `sweep`/`compact`
+    * streaming ingest loop takes it for its index/snapshot dirs and
+    * releases it on termination; [[assertUnlocked]] makes `sweep`/`compact`
     * fail loudly instead of racing a live publish (a sweep's full-listing
     * deletes against a concurrent publish could drop a leaf written after
     * the listing — VERDICT r15 "What's wrong" #3).
@@ -99,8 +99,8 @@ private[graft] object IndexMeta {
     * CREATE-EXCLUSIVE with an OWNER token (r17, aligning with
     * [[graft.streaming.IndexMaintenance]]'s `_COMPACT_LOCK` — VERDICT r16
     * "What's wrong" #3): taking a held lock succeeds only when the
-    * holder's owner token equals the caller's — the ingest loops pass
-    * their CHECKPOINT LOCATION, so a crashed incarnation of the same
+    * holder's owner token equals the caller's — the ingest loop passes
+    * its CHECKPOINT LOCATION, so a crashed incarnation of the same
     * stream (same checkpoint → same token) recovers hands-free, while a
     * second live stream on the same dir (necessarily a different
     * checkpoint — one config typo away) fails LOUDLY instead of both
@@ -196,7 +196,7 @@ private[graft] object IndexMeta {
     if (holder.contains(ownerToken(owner))) unlock(dir)
   }
 
-  /** Unconditional release — [[MinhashIndex.forceUnlock]]'s engine (the
+  /** Unconditional release — [[NearDupIndex.forceUnlock]]'s engine (the
     * operator-facing stale-lock escape hatch). */
   def unlock(dir: String): Unit = {
     val p = new Path(new Path(dir), LockFile)

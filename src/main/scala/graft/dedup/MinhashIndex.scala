@@ -41,7 +41,7 @@ import org.apache.spark.sql.functions._
   * (hash-set form here — same accepted ~2⁻⁶⁴ collision odds as every
   * hashed join key in this package), `round(j, 4) ≥ threshold`, and two
   * empty-shingle docs count as exact duplicates (j = 1.0). */
-object MinhashIndex {
+object MinhashIndex extends NearDupIndex {
 
   /** `nPart`: hash-partition count of the WRITTEN layout (the
     * [[graft.sparse.SparseRetrieval.writePostingsIndex]] protocol applied
@@ -68,8 +68,8 @@ object MinhashIndex {
       if (parts.length > 4) parts(4).toInt else 0)
   }
 
-  private def postingsDir(path: String) = s"$path/postings"
-  private def sketchesDir(path: String) = s"$path/sketches"
+  protected def leafDirs(path: String): Seq[String] =
+    Seq(postingsDir(path), sketchesDir(path))
 
   private def pbCol(m: Meta) =
     pmod(col("bucket"), lit(m.nPart.toLong)).cast("int").as("pb")
@@ -198,10 +198,10 @@ object MinhashIndex {
 
   /** Build the index from the (already dedup'd) base corpus. The compact
     * (sh, sig) relation is persisted across the two writes — without it
-    * the corpus is re-shingled for the postings output (ADVICE round 11). */
-  /** nPart = 0 (default) scales the partition count to the written
-    * postings ([[IndexMeta.autoParts]] — constant partition size at any
-    * corpus); pass an explicit count to pin it. */
+    * the corpus is re-shingled for the postings output. nPart = 0
+    * (default) scales the partition count to the written postings
+    * ([[IndexMeta.autoParts]] — constant partition size at any corpus);
+    * pass an explicit count to pin it. */
   def write(df: DataFrame, path: String, textCol: String = "text",
       idCol: String = "doc_id", shingleSize: Int = 3, numHashes: Int = 32,
       bands: Int = 8, seed: Long = 42L, nPart: Int = 0): Unit = {
@@ -232,38 +232,6 @@ object MinhashIndex {
     k.unpersist(blocking = false)
   }
 
-  /** Offline maintenance: merge partition leaves that accumulated more
-    * than `maxFiles` append files ([[IndexCompaction]] — run between
-    * ingest batches; preserves [[deltaPairs]] output exactly,
-    * spec-pinned). Returns the number of leaves rewritten. Throws while a
-    * streaming session holds the index lock (the leaf swap's momentary
-    * absence must never race a live pruned read — the in-loop
-    * `compactEvery` path compacts under its own lock instead). */
-  def compact(spark: SparkSession, path: String, maxFiles: Int = 8): Int = {
-    IndexMeta.assertUnlocked(path, "compact")
-    compactLeaves(spark, path, maxFiles)
-  }
-
-  private def compactLeaves(spark: SparkSession, path: String, maxFiles: Int): Int =
-    IndexCompaction.compactDir(spark, postingsDir(path), maxFiles) +
-      IndexCompaction.compactDir(spark, sketchesDir(path), maxFiles)
-
-  /** Clear a crashed streaming session's stale [[IndexMeta.LockFile]] so
-    * the offline tools ([[compact]], [[sweepClusters]]) run again. Never
-    * needed after clean termination — the ingest loops release on exit. */
-  def forceUnlock(dir: String): Unit = IndexMeta.unlock(dir)
-
-  /** Crash-debris repair for the index's partition leaves
-    * ([[IndexCompaction.repairDir]]): restores a leaf a crashed
-    * [[compact]] left mid-swap, so a pruned read never treats it as
-    * empty. The streaming loops run it at the START of every batch when
-    * `compactEvery > 0` (the replayed epoch reads BEFORE its end-of-batch
-    * compact would repair — ADVICE r14). */
-  def repair(path: String): Unit = {
-    IndexCompaction.repairDir(postingsDir(path))
-    IndexCompaction.repairDir(sketchesDir(path))
-  }
-
   /** Near-duplicate pairs (id_a < id_b, jaccard) touching the delta:
     * old×new from the index postings join, new×new from the delta's own
     * buckets — never old×old (the base was dedup'd when it was indexed).
@@ -273,32 +241,13 @@ object MinhashIndex {
     * like the whole-corpus form. */
   def deltaPairs(spark: SparkSession, path: String, delta: DataFrame,
       textCol: String = "text", idCol: String = "doc_id",
-      threshold: Double = 0.7, maxBucket: Option[Int] = None): DataFrame = {
-    val m = readMeta(path)
-    // shingle + sign the delta ONCE into the compact cache; postings are
-    // additionally persisted because several parallel broadcast builds
-    // consume them (the band explode would race-recompute), while the
-    // sketch projection off the cached relation is a column select. The
-    // caches fill inside deltaPairsSketched's first action (the pruned
-    // read's pbs collect) — no separate count (VERDICT r13 task #2).
-    val k = keyed(delta, textCol, idCol, m).persist()
-    val dPostings = postingsOf(k, m).persist()
-    val out = deltaPairsSketched(spark, path, m, sketchesOf(k), dPostings,
-      threshold, maxBucket)
-    k.unpersist(blocking = false)
-    dPostings.unpersist(blocking = false)
-    out
-  }
+      threshold: Double = 0.7, maxBucket: Option[Int] = None): DataFrame =
+    prepared(path, textCol, idCol, threshold, maxBucket)(spark, delta).pairsOnly()
 
-  /** [[deltaPairs]] over a pre-sketched delta — the streaming ingest loop
-    * fingerprints each batch ONCE and feeds both the pair search and the
-    * index append (the un-shared form ran the signature UDF twice per
-    * batch). `dPostings` must arrive PERSISTED (several broadcast builds
-    * consume it); the first action here — the pruned read's pbs collect —
-    * fills it, so callers do not count. `dSketches` may be a cheap
-    * derivation off a cached parent. The caller releases both (the
-    * returned relation is materialized before return, so release is safe
-    * immediately). */
+  /** [[deltaPairs]] over a [[prepared]] delta. `dPostings` arrives
+    * PERSISTED and `dSketches` is a select off a persisted parent; the
+    * caller releases both (the returned relation is materialized before
+    * return, so release is safe immediately). */
   private def deltaPairsSketched(spark: SparkSession, path: String, m: Meta,
       dSketches: DataFrame, dPostings: DataFrame,
       threshold: Double, maxBucket: Option[Int]): DataFrame = {
@@ -398,89 +347,51 @@ object MinhashIndex {
       Seq(cand, rel) ++ (if (maxBucket.isDefined) Seq(matched) else Nil): _*)
   }
 
-  /** Streaming near-dup ingest: every micro-batch is dedup'd against the
-    * index ([[deltaPairs]]), its pairs appended under `outDir`, and the
-    * batch folded in ([[append]]) — the foreachBatch form of the
-    * [[graft.streaming.IndexMaintenance]] flush loop, applied to dedup.
-    *
-    * The emitted pair set is BATCHING-INVARIANT: a pair surfaces exactly
-    * when its later side arrives (earlier side from the index, same-batch
-    * sides from the batch's own buckets), so streaming a whole corpus
-    * from an empty index reproduces `minhashLsh(corpus)` regardless of
-    * how the stream is chopped (spec-pinned; the q_stream_dedup_minhash
-    * gate rides q_dedup_minhash's oracle verbatim on this property).
-    * foreachBatch is at-least-once — a replayed batch can append duplicate
-    * pair rows and postings; read `outDir` with dropDuplicates(id_a, id_b)
-    * (pair jaccards are deterministic, so duplicates agree). */
-  /** The FULL streaming dedup pipeline: every micro-batch is dedup'd
-    * against the index ([[deltaPairs]]), folded in ([[append]]), AND the
-    * cluster assignment is incrementally maintained
-    * ([[Dedup.resolveClustersIncremental]] — star edges from the prior
-    * assignment + only this batch's pairs), so at every point in the
-    * stream `clustersDir` holds the same (id, cluster_id) relation a
-    * whole-corpus `resolveClusters(minhashLsh(seen))` would produce (the
-    * CC identity CC(star(CC(E₁)) ∪ E₂) = CC(E₁ ∪ E₂), applied per batch —
-    * batching-invariant by induction, spec-pinned). This is the complete
-    * production ingest shape: per batch, work is bounded by
-    * |batch| + |assignment| + |new pairs|; the corpus text is never
-    * re-scanned.
-    *
-    * Assignment storage and at-least-once hardening live in
-    * [[ClusterFold]] (versioned snapshots + atomic CURRENT pointer,
-    * replayed-epoch skip, strict pointer reads, superseded-version GC —
-    * shared verbatim by the winnow and embedding legs): a replayed batch
-    * recomputes the same pairs (index append replays are absorbed — see
-    * [[append]]) and the fold skips its already-published epoch, so a
-    * crash anywhere between the assignment publish and the index append
-    * replays into the same fixed point. */
+  /** Streaming near-dup ingest ([[NearDupIndex.ingest]]): each
+    * micro-batch's pairs are appended under `outDir`. `maxBucket` caps
+    * bucket populations as they stand when each batch arrives, so setting
+    * it gives up batching invariance. */
+  def ingestStream(stream: DataFrame, path: String, outDir: String,
+      textCol: String = "text", idCol: String = "doc_id",
+      threshold: Double = 0.7, maxBucket: Option[Int] = None,
+      compactEvery: Int = 0): Unit =
+    ingest(stream, path, compactEvery, NearDupIndex.pairsTo(outDir))(
+      prepared(path, textCol, idCol, threshold, maxBucket))
 
-  /** `compactEvery` > 0 merges oversized partition leaves every N epochs
-    * ([[compact]]) — safe in-loop: foreachBatch is the index's only
-    * writer, so the swap's momentary leaf absence has no reader to race;
-    * a replayed epoch re-compacts idempotently. 0 = offline-only. */
+  /** Streaming near-dup ingest ([[NearDupIndex.ingest]]) that maintains
+    * the cluster assignment under `clustersDir`
+    * ([[NearDupIndex.foldInto]]) — at every point in the stream it equals
+    * `resolveClusters(minhashLsh(seen))`. */
   def ingestStreamClustered(stream: DataFrame, path: String,
       clustersDir: String, textCol: String = "text", idCol: String = "doc_id",
       threshold: Double = 0.7, compactEvery: Int = 0,
       foldTargetRows: Long = ClusterFold.TargetRows,
-      foldMaxParts: Int = ClusterFold.MaxParts): Unit = {
-    val lockOwner = s"$path/_checkpoint"
-    IndexMeta.lock(path, lockOwner); IndexMeta.lock(clustersDir, lockOwner)
-    try {
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, epoch: Long) =>
-          val spark = batch.sparkSession
-          repair(path) // crashed-compact debris (possibly another
-          // session's), BEFORE the pruned read: a retired leaf reads as
-          // empty and the next append would make the loss permanent
-          val m = readMeta(path)
-          val k = keyed(batch, textCol, idCol, m).persist()
-          val dPo = postingsOf(k, m).persist() // fills in the pruned read
-          val pairs = deltaPairsSketched(spark, path, m, sketchesOf(k), dPo,
-            threshold, None)
-          ClusterFold.foldBatch(spark, clustersDir, epoch, pairs,
-            batch.select(col(idCol).cast("long").as("id")).distinct(),
-            targetRows = foldTargetRows, maxParts = foldMaxParts)
-          writeSketches(sketchesOf(k), path, m, "append")
-          writePostings(dPo, path, m, "append")
-          if (compactEvery > 0 && (epoch + 1) % compactEvery == 0)
-            compactLeaves(spark, path, 8)
-          k.unpersist(blocking = false)
-          dPo.unpersist(blocking = false)
-          pairs.unpersist(blocking = false) // deltaPairsSketched's result cache
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", s"$path/_checkpoint")
-        .start()
-      q.awaitTermination()
-    } finally { IndexMeta.unlock(clustersDir, lockOwner); IndexMeta.unlock(path, lockOwner) }
-  }
+      foldMaxParts: Int = ClusterFold.MaxParts): Unit =
+    ingest(stream, path, compactEvery,
+      NearDupIndex.foldInto(clustersDir, idCol, foldTargetRows, foldMaxParts))(
+      prepared(path, textCol, idCol, threshold, None))
 
-  /** The STORED rows of the assignment maintained by
-    * [[ingestStreamClustered]] — members of multi-member clusters only;
-    * singletons are implicit ([[ClusterFold.storedClusters]]). */
-  def storedClusters(spark: SparkSession, clustersDir: String): DataFrame =
-    ClusterFold.storedClusters(spark, clustersDir)
+  /** Shingle + sign the delta ONCE into the compact cache; its postings
+    * are persisted too, because several parallel broadcast builds consume
+    * them (the band explode would race-recompute), while the sketch
+    * projection off the cached relation is a column select. Both feed the
+    * pair search AND the index append, and both fill inside
+    * [[deltaPairsSketched]]'s first action (the pruned read's pbs
+    * collect) — no separate count. */
+  private def prepared(path: String, textCol: String, idCol: String,
+      threshold: Double, maxBucket: Option[Int])(
+      spark: SparkSession, delta: DataFrame): NearDupIndex.Batch = {
+    val m = readMeta(path)
+    val k = keyed(delta, textCol, idCol, m).persist()
+    val dPo = postingsOf(k, m).persist()
+    NearDupIndex.Batch(Seq(k, dPo),
+      () => deltaPairsSketched(spark, path, m, sketchesOf(k), dPo, threshold,
+        maxBucket),
+      () => {
+        writeSketches(sketchesOf(k), path, m, "append")
+        writePostings(dPo, path, m, "append")
+      })
+  }
 
   /** The full relation over `allIds` — stored multi-member clusters plus
     * the implicit singletons (absent id = own cluster). */
@@ -488,47 +399,8 @@ object MinhashIndex {
       allIds: DataFrame): DataFrame =
     ClusterFold.currentClustersFull(spark, clustersDir, allIds)
 
-  /** Offline snapshot-debris sweep for the cluster assignment this
-    * module's [[ingestStreamClustered]] maintains — deletes every
-    * partition leaf/epoch dir referenced by neither CURRENT nor PREVIOUS
-    * (the per-publish GC is incremental and a crashed publish can orphan
-    * debris only a full listing finds). Run between streaming sessions,
-    * like [[compact]]. */
+  /** Offline snapshot-debris sweep for a cluster assignment
+    * ([[ClusterFold.sweep]]); run between streaming sessions, like
+    * [[compact]]. */
   def sweepClusters(clustersDir: String): Unit = ClusterFold.sweep(clustersDir)
-
-  def ingestStream(stream: DataFrame, path: String, outDir: String,
-      textCol: String = "text", idCol: String = "doc_id",
-      threshold: Double = 0.7, maxBucket: Option[Int] = None,
-      compactEvery: Int = 0): Unit = {
-    val lockOwner = s"$path/_checkpoint"
-    IndexMeta.lock(path, lockOwner)
-    try {
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, epoch: Long) =>
-          // shingle + sign the batch ONCE: the compact cached relations feed
-          // the pair search AND the index append
-          repair(path) // crashed-compact debris (possibly another
-          // session's), BEFORE the pruned read: a retired leaf reads as
-          // empty and the next append would make the loss permanent
-          val m = readMeta(path)
-          val k = keyed(batch, textCol, idCol, m).persist()
-          val dPo = postingsOf(k, m).persist() // fills in the pruned read
-          val pairs = deltaPairsSketched(batch.sparkSession, path, m,
-            sketchesOf(k), dPo, threshold, maxBucket)
-          pairs.write.mode("append").parquet(outDir)
-          writeSketches(sketchesOf(k), path, m, "append")
-          writePostings(dPo, path, m, "append")
-          if (compactEvery > 0 && (epoch + 1) % compactEvery == 0)
-            compactLeaves(batch.sparkSession, path, 8)
-          k.unpersist(blocking = false)
-          dPo.unpersist(blocking = false)
-          pairs.unpersist(blocking = false) // the per-batch result cache
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", s"$path/_checkpoint")
-        .start()
-      q.awaitTermination()
-    } finally IndexMeta.unlock(path, lockOwner)
-  }
 }

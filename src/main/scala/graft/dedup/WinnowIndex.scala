@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   * evaluated on the COMBINED (index + delta) document frequency, exactly
   * the full-corpus cap semantics; the hot-key set is regime-tiny and
   * broadcasts into both candidate paths. */
-object WinnowIndex {
+object WinnowIndex extends NearDupIndex {
 
   /** `nPart`: hash-partition count of the written layout — postings
     * partition on `pb = pmod(gh, nPart)` (gh is already a 64-bit
@@ -51,7 +51,7 @@ object WinnowIndex {
       if (parts.length > 2) parts(2).toInt else 0)
   }
 
-  private def postingsDir(path: String) = s"$path/postings"
+  protected def leafDirs(path: String): Seq[String] = Seq(postingsDir(path))
 
   private def pbCol(m: Meta) =
     pmod(col("gh"), lit(m.nPart.toLong)).cast("int").as("pb")
@@ -106,27 +106,6 @@ object WinnowIndex {
     writePostings(postingsOf(delta, textCol, idCol, m), path, m, "append")
   }
 
-  /** Offline maintenance: merge partition leaves that accumulated more
-    * than `maxFiles` append files ([[IndexCompaction]]). Throws while a
-    * streaming session holds the index lock — see
-    * [[MinhashIndex.compact]]. */
-  def compact(spark: SparkSession, path: String, maxFiles: Int = 8): Int = {
-    IndexMeta.assertUnlocked(path, "compact")
-    compactLeaves(spark, path, maxFiles)
-  }
-
-  private def compactLeaves(spark: SparkSession, path: String, maxFiles: Int): Int =
-    IndexCompaction.compactDir(spark, postingsDir(path), maxFiles)
-
-  /** Clear a crashed streaming session's stale [[IndexMeta.LockFile]] —
-    * see [[MinhashIndex.forceUnlock]]. */
-  def forceUnlock(dir: String): Unit = IndexMeta.unlock(dir)
-
-  /** Crash-debris repair for the index's partition leaves
-    * ([[IndexCompaction.repairDir]]) — see [[MinhashIndex.repair]]. */
-  def repair(path: String): Unit =
-    IndexCompaction.repairDir(postingsDir(path))
-
   /** Winnow pairs (id_a < id_b, n_shared ≥ minShared) touching the delta:
     * old×new from the index postings join, new×new from
     * [[Dedup.winnowPairsFromArr]] over the delta alone (duplicate-set
@@ -135,23 +114,12 @@ object WinnowIndex {
     * (spec-pinned), including under `maxDf`. */
   def deltaPairs(spark: SparkSession, path: String, delta: DataFrame,
       textCol: String = "text", idCol: String = "doc_id",
-      minShared: Int = 1, maxDf: Option[Int] = None): DataFrame = {
-    val m = readMeta(path)
-    // fingerprint once, not per consumer — the caches fill inside
-    // deltaPairsPrepared's first action (the pruned read's pbs collect)
-    val dArr = Dedup.winnowDocArr(delta, textCol, idCol, m.k, m.w).persist()
-    val dPost = dArr.select(explode(col("ghs")).as("gh"), col("id")).persist()
-    val out = deltaPairsPrepared(spark, path, m, dArr, dPost, minShared, maxDf)
-    dArr.unpersist(blocking = false)
-    dPost.unpersist(blocking = false)
-    out
-  }
+      minShared: Int = 1, maxDf: Option[Int] = None): DataFrame =
+    prepared(path, textCol, idCol, minShared, maxDf)(spark, delta).pairsOnly()
 
-  /** [[deltaPairs]] over a pre-fingerprinted delta — the streaming ingest
-    * loop fingerprints each batch ONCE and feeds both the pair search and
-    * the index append. Inputs arrive PERSISTED and fill inside the first
-    * action here (the pruned read's pbs collect); the caller releases them
-    * (the returned relation is materialized before return). */
+  /** [[deltaPairs]] over a [[prepared]] delta. Inputs arrive PERSISTED;
+    * the caller releases them (the returned relation is materialized
+    * before return). */
   private def deltaPairsPrepared(spark: SparkSession, path: String, m: Meta,
       dArr: DataFrame, dPost: DataFrame,
       minShared: Int, maxDf: Option[Int]): DataFrame = {
@@ -220,123 +188,41 @@ object WinnowIndex {
       Seq(newNew) ++ (if (maxDf.isDefined) Seq(matched) else Nil): _*)
   }
 
-  /** Streaming overlap ingest: every micro-batch is checked against the
-    * index ([[deltaPairs]]), its pairs appended under `outDir`, and the
-    * batch's postings folded in — [[MinhashIndex.ingestStream]] on the
-    * winnow leg. With `maxDf = None` (the default) the emitted pair set is
-    * BATCHING-INVARIANT: n_shared is the size of the two docs' fingerprint
-    * intersection regardless of when each side arrived, so streaming a
-    * whole corpus from an empty index reproduces `winnowPairs(corpus)`
-    * however the stream is chopped (spec-pinned; the q_stream_dedup_winnow
-    * gate rides q_dedup_winnow's oracle verbatim on this property). A
-    * maxDf cap would NOT be batching-invariant — document frequencies
-    * evolve as batches land — so it is intentionally not exposed here.
-    * foreachBatch is at-least-once: replayed postings are absorbed by the
-    * read-side dedup, and replayed pair rows agree (deterministic
-    * n_shared) — read `outDir` with dropDuplicates(id_a, id_b). */
-  /** The full streaming substring-dedup pipeline: per micro-batch, the
-    * arriving docs are checked against the index ([[deltaPairs]]), the
-    * batch's postings folded in, AND the cluster assignment incrementally
-    * maintained — [[MinhashIndex.ingestStreamClustered]] on the winnow
-    * leg. The fold ([[ClusterFold]]) is leg-agnostic (it consumes pairs),
-    * and the pair stream here is batching-invariant (n_shared is the two
-    * docs' fingerprint-intersection size regardless of arrival order), so
-    * streaming a corpus from an empty index publishes the same assignment
-    * whole-corpus `resolveClusters(winnowPairs(corpus))` produces — the
-    * per-batch CC identity CC(star(CC(E₁)) ∪ E₂) = CC(E₁ ∪ E₂), by
-    * induction over batches (spec-pinned). */
+  /** Streaming overlap ingest ([[NearDupIndex.ingest]]): each
+    * micro-batch's pairs are appended under `outDir`. Batching-invariant
+    * because n_shared is the two docs' fingerprint-intersection size
+    * whenever each arrived; a `maxDf` cap is not (document frequencies
+    * evolve as batches land), so it is not exposed. */
+  def ingestStream(stream: DataFrame, path: String, outDir: String,
+      textCol: String = "text", idCol: String = "doc_id",
+      minShared: Int = 1, compactEvery: Int = 0): Unit =
+    ingest(stream, path, compactEvery, NearDupIndex.pairsTo(outDir))(
+      prepared(path, textCol, idCol, minShared, None))
 
-  /** `compactEvery` > 0 merges oversized partition leaves every N epochs
-    * ([[compact]]) — safe in-loop: foreachBatch is the index's only
-    * writer, so the swap's momentary leaf absence has no reader to race;
-    * a replayed epoch re-compacts idempotently. 0 = offline-only. */
+  /** [[ingestStream]] maintaining the cluster assignment under
+    * `clustersDir` instead ([[NearDupIndex.foldInto]]) — at every point in
+    * the stream it equals `resolveClusters(winnowPairs(seen))`. */
   def ingestStreamClustered(stream: DataFrame, path: String,
       clustersDir: String, textCol: String = "text", idCol: String = "doc_id",
       minShared: Int = 1, compactEvery: Int = 0,
       foldTargetRows: Long = ClusterFold.TargetRows,
-      foldMaxParts: Int = ClusterFold.MaxParts): Unit = {
-    val lockOwner = s"$path/_checkpoint"
-    IndexMeta.lock(path, lockOwner); IndexMeta.lock(clustersDir, lockOwner)
-    try {
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, epoch: Long) =>
-          repair(path) // crashed-compact debris (possibly another
-          // session's), BEFORE the pruned read: a retired leaf reads as
-          // empty and the next append would make the loss permanent
-          val m = readMeta(path)
-          val dArr = Dedup.winnowDocArr(batch, textCol, idCol, m.k, m.w).persist()
-          val dPost = dArr.select(explode(col("ghs")).as("gh"), col("id")).persist()
-          val pairs = deltaPairsPrepared(batch.sparkSession, path, m, dArr,
-            dPost, minShared, None)
-          ClusterFold.foldBatch(batch.sparkSession, clustersDir, epoch, pairs,
-            batch.select(col(idCol).cast("long").as("id")).distinct(),
-            targetRows = foldTargetRows, maxParts = foldMaxParts)
-          writePostings(dPost, path, m, "append")
-          if (compactEvery > 0 && (epoch + 1) % compactEvery == 0)
-            compactLeaves(batch.sparkSession, path, 8)
-          dArr.unpersist(blocking = false)
-          dPost.unpersist(blocking = false)
-          pairs.unpersist(blocking = false)
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", s"$path/_checkpoint")
-        .start()
-      q.awaitTermination()
-    } finally { IndexMeta.unlock(clustersDir, lockOwner); IndexMeta.unlock(path, lockOwner) }
-  }
+      foldMaxParts: Int = ClusterFold.MaxParts): Unit =
+    ingest(stream, path, compactEvery,
+      NearDupIndex.foldInto(clustersDir, idCol, foldTargetRows, foldMaxParts))(
+      prepared(path, textCol, idCol, minShared, None))
 
-  /** The STORED rows of the assignment maintained by
-    * [[ingestStreamClustered]] — members of multi-member clusters only;
-    * singletons are implicit ([[ClusterFold.storedClusters]]). */
-  def storedClusters(spark: SparkSession, clustersDir: String): DataFrame =
-    ClusterFold.storedClusters(spark, clustersDir)
-
-  /** The full relation over `allIds` — stored multi-member clusters plus
-    * the implicit singletons (absent id = own cluster). */
-  def currentClustersFull(spark: SparkSession, clustersDir: String,
-      allIds: DataFrame): DataFrame =
-    ClusterFold.currentClustersFull(spark, clustersDir, allIds)
-
-  /** Offline snapshot-debris sweep for the cluster assignment this
-    * module's [[ingestStreamClustered]] maintains — deletes every
-    * partition leaf/epoch dir referenced by neither CURRENT nor PREVIOUS
-    * (the per-publish GC is incremental and a crashed publish can orphan
-    * debris only a full listing finds). Run between streaming sessions,
-    * like [[compact]]. */
-  def sweepClusters(clustersDir: String): Unit = ClusterFold.sweep(clustersDir)
-
-  def ingestStream(stream: DataFrame, path: String, outDir: String,
-      textCol: String = "text", idCol: String = "doc_id",
-      minShared: Int = 1, compactEvery: Int = 0): Unit = {
-    val lockOwner = s"$path/_checkpoint"
-    IndexMeta.lock(path, lockOwner)
-    try {
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, epoch: Long) =>
-          // fingerprint the batch ONCE: the cached relations feed the pair
-          // search AND the index append
-          repair(path) // crashed-compact debris (possibly another
-          // session's), BEFORE the pruned read: a retired leaf reads as
-          // empty and the next append would make the loss permanent
-          val m = readMeta(path)
-          val dArr = Dedup.winnowDocArr(batch, textCol, idCol, m.k, m.w).persist()
-          val dPost = dArr.select(explode(col("ghs")).as("gh"), col("id")).persist()
-          val pairs = deltaPairsPrepared(batch.sparkSession, path, m, dArr,
-            dPost, minShared, None)
-          pairs.write.mode("append").parquet(outDir)
-          writePostings(dPost, path, m, "append")
-          if (compactEvery > 0 && (epoch + 1) % compactEvery == 0)
-            compactLeaves(batch.sparkSession, path, 8)
-          dArr.unpersist(blocking = false)
-          dPost.unpersist(blocking = false)
-          pairs.unpersist(blocking = false) // the per-batch result cache
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", s"$path/_checkpoint")
-        .start()
-      q.awaitTermination()
-    } finally IndexMeta.unlock(path, lockOwner)
+  /** Fingerprint the delta ONCE, not per consumer: the cached relations
+    * feed the pair search AND the index append, and fill inside
+    * [[deltaPairsPrepared]]'s first action (the pruned read's pbs
+    * collect). */
+  private def prepared(path: String, textCol: String, idCol: String,
+      minShared: Int, maxDf: Option[Int])(
+      spark: SparkSession, delta: DataFrame): NearDupIndex.Batch = {
+    val m = readMeta(path)
+    val dArr = Dedup.winnowDocArr(delta, textCol, idCol, m.k, m.w).persist()
+    val dPost = dArr.select(explode(col("ghs")).as("gh"), col("id")).persist()
+    NearDupIndex.Batch(Seq(dArr, dPost),
+      () => deltaPairsPrepared(spark, path, m, dArr, dPost, minShared, maxDf),
+      () => writePostings(dPost, path, m, "append"))
   }
 }

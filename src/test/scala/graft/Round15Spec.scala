@@ -13,8 +13,9 @@ import graft.dedup.{ClusterFold, Dedup, IndexCompaction, IndexMeta, MinhashIndex
   *    partitions (PREVIOUS-manifest diff), with [[ClusterFold.sweep]] as
   *    the offline full-listing cleanup for crash debris;
   *  - crashed-compact debris repair BEFORE the pruned read in the
-  *    streaming loops (a replayed epoch reads before its end-of-batch
-  *    compact would repair — ADVICE r14 #1);
+  *    streaming loop (a replayed epoch reads before its end-of-batch
+  *    compact would repair), for every leg, both sinks and every index
+  *    relation (postings and sketches leaves);
   *  - a seeded randomized multi-epoch fold-equivalence property over
   *    both the driver fast-path and the distributed CC path, with
   *    compactions and zero-pair epochs interleaved (plain generators —
@@ -175,49 +176,96 @@ class Round15Spec extends SparkSpec {
     assert(MinhashIndex.deltaPairs(spark, idx, probe, threshold = 0.5).count() == want)
   }
 
-  test("ingestStreamClustered with compactEvery repairs crashed-compact debris before reading") {
-    val all = (0 until 12).map { i =>
-      (i.toLong, s"streaming repair corpus item number ${i / 3} padded with common filler words")
-    }.toDF("doc_id", "text").persist()
+  /** One leg × sink of the crashed-compact repair pin: `write` builds an
+    * empty index, `ingest(stream, index, out, compactEvery)` runs one
+    * stream session into `out`, and `pairs` is the leg's whole-corpus
+    * operator. `leaves` are the index relations whose partition leaves
+    * the simulated crash retires. */
+  private final case class RepairRow(corpus: org.apache.spark.sql.DataFrame,
+      idCol: String, leaves: Seq[String], clustered: Boolean,
+      write: (org.apache.spark.sql.DataFrame, String) => Unit,
+      ingest: (org.apache.spark.sql.DataFrame, String, String, Int) => Unit,
+      pairs: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
+
+  private def repairText(n: Int) = (0 until n).map { i =>
+    (i.toLong, s"streaming repair corpus item number ${i / 3} padded with common filler words")
+  }.toDF("doc_id", "text")
+
+  /** Session 1 (compactEvery = 1, one batch) fills the index; then every
+    * partition leaf of every index relation is left retired, as a compact
+    * that crashed between its two swap renames leaves it. Session 2 streams
+    * copies of the corpus under new ids with compactEvery = 0 — the
+    * CROSS-SESSION hole: a later default-config session must still
+    * repair, or its pruned read sees the retired leaves as empty and its
+    * append makes the loss permanent. Every pair linking the two
+    * sessions comes from the index, so a missed repair shows as a
+    * diverged result. */
+  private def crashThenResume(row: RepairRow): Unit = {
+    val all = row.corpus.persist()
     val srcDir = tmpPath("srepair_src")
-    all.repartition(2).write.mode("overwrite").parquet(srcDir)
+    all.repartition(1).write.mode("overwrite").parquet(srcDir)
     val root = tmpPath("srepair")
-    val idx = s"$root/index"; val cl = s"$root/clusters"
-    MinhashIndex.write(all.limit(0), idx)
-    // run the stream once to populate the index, then simulate the crash
-    val s1 = spark.readStream.schema(all.schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    MinhashIndex.ingestStreamClustered(s1, idx, cl, threshold = 0.5,
-      compactEvery = 1)
-    val post = new java.io.File(s"$idx/postings")
-    post.listFiles().filter(f => f.isDirectory && f.getName.startsWith("pb="))
-      .foreach { f =>
-        assert(f.renameTo(new java.io.File(post, s".retired_${f.getName}")))
-      }
-    // second stream session over NEW near-dup docs (appended to the same
-    // source dir — the checkpoint pins the path): with the pre-read
-    // repair their pairs against the retired postings are found. The
-    // session deliberately runs with compactEvery = 0 — the CROSS-SESSION
-    // hole (review r15): the crashed compact belonged to a compactEvery>0
-    // session, and a later default-config session must still repair, or
-    // its pruned read sees the retired leaf as empty and its append makes
-    // the loss permanent
-    val more = all.withColumn("doc_id", col("doc_id") + 1000L)
+    val idx = s"$root/index"; val out = s"$root/out"
+    row.write(all.limit(0), idx)
+    def session(compactEvery: Int): Unit =
+      row.ingest(spark.readStream.schema(all.schema)
+        .option("maxFilesPerTrigger", 1).parquet(srcDir), idx, out, compactEvery)
+    session(1)
+    row.leaves.foreach { leaf =>
+      val dir = new java.io.File(s"$idx/$leaf")
+      val live = dir.listFiles().filter(f => f.isDirectory && f.getName.contains("="))
+      assert(live.nonEmpty, s"$leaf has no partition leaves to retire")
+      live.foreach(f => assert(f.renameTo(new java.io.File(dir, s".retired_${f.getName}"))))
+    }
+    val more = all.withColumn(row.idCol, col(row.idCol) + 1000L)
     more.repartition(1).write.mode("append").parquet(srcDir)
-    val s2 = spark.readStream.schema(all.schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    MinhashIndex.ingestStreamClustered(s2, idx, cl, threshold = 0.5)
-    val got = assignSet(ClusterFold.currentClustersFull(spark, cl,
-      all.select(col("doc_id").as("id")).unionByName(
-        more.select(col("doc_id").as("id")))))
-    val batch = assignSet(Dedup.resolveClusters(
-      Dedup.minhashLsh(all.unionByName(more), threshold = 0.5)
-        .select(col("id_a"), col("id_b")),
-      all.select(col("doc_id").as("id")).unionByName(
-        more.select(col("doc_id").as("id")))))
-    assert(got == batch,
-      "retired postings leaves were not repaired before the pruned read")
+    session(0)
+    val both = all.unionByName(more)
+    val ids = both.select(col(row.idCol).as("id"))
+    val want = row.pairs(both).select(col("id_a"), col("id_b"))
+    val (got, expected) =
+      if (row.clustered) (assignSet(ClusterFold.currentClustersFull(spark, out, ids)),
+        assignSet(Dedup.resolveClusters(want, ids)))
+      else (assignSet(spark.read.parquet(out).select(col("id_a"), col("id_b")).distinct()),
+        assignSet(want))
+    assert(got == expected,
+      s"retired ${row.leaves.mkString("/")} leaves were not repaired before the pruned read")
     all.unpersist()
+  }
+
+  test("ingestStreamClustered with compactEvery repairs crashed-compact debris before reading") {
+    import graft.dedup.{EmbeddingIndex, WinnowIndex}
+    val both = Seq("postings", "sketches")
+    withClue("minhash: ") {
+      crashThenResume(RepairRow(repairText(12), "doc_id", both, clustered = true,
+        (df, idx) => MinhashIndex.write(df, idx),
+        (st, idx, out, every) => MinhashIndex.ingestStreamClustered(st, idx, out,
+          threshold = 0.5, compactEvery = every),
+        Dedup.minhashLsh(_, threshold = 0.5)))
+    }
+    withClue("winnow: ") {
+      crashThenResume(RepairRow(repairText(12), "doc_id", Seq("postings"), clustered = true,
+        (df, idx) => WinnowIndex.write(df, idx, k = 4, w = 4),
+        (st, idx, out, every) => WinnowIndex.ingestStreamClustered(st, idx, out,
+          minShared = 2, compactEvery = every),
+        Dedup.winnowPairs(_, k = 4, w = 4, minShared = 2)))
+    }
+    withClue("embedding: ") {
+      crashThenResume(RepairRow(vecs(12), "vec_id", both, clustered = true,
+        (df, idx) => EmbeddingIndex.write(df, idx, dim = 16, nbits = 4, tables = 8),
+        (st, idx, out, every) => EmbeddingIndex.ingestStreamClustered(st, idx, out,
+          threshold = 0.9, compactEvery = every),
+        Dedup.embeddingNearDupLsh(_, dim = 16, threshold = 0.9, nbits = 4, tables = 8)))
+    }
+  }
+
+  test("ingestStream (pairs sink) repairs crashed-compact debris before reading") {
+    crashThenResume(RepairRow(repairText(12), "doc_id", Seq("postings", "sketches"),
+      clustered = false,
+      (df, idx) => MinhashIndex.write(df, idx),
+      (st, idx, out, every) => MinhashIndex.ingestStream(st, idx, out,
+        threshold = 0.5, compactEvery = every),
+      Dedup.minhashLsh(_, threshold = 0.5)))
   }
 
   test("fold property: random multi-epoch streams ≡ whole-corpus resolveClusters (driver + distributed + compaction interleaved)") {
